@@ -1,9 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract of the engine (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs each
-``queries()[name]`` at sf=0.01 and compares it against the matching
-``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
-value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check.  Each ``queries()[name]`` builds a
+DataFrame that must match the DuckDB result of ``oracle_sql()[name]``
+(row count + schema + order-insensitive value hash);
+``scripts/verify_driver.py`` runs that comparison.
 
 All real logic lives in ``distributed_mapreduce_in_docker_rpyc_spark/``; this module only adapts the
 registry (distributed_mapreduce_in_docker_rpyc_spark/registry.py) to the driver's shape.

@@ -803,8 +803,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/exactmath.py — same IEEE multiply, same HALF_UP decimal(38,12)
     quantize via shortest-round-trip repr, same exact decimal sum, same
     correctly-rounded cast back; differential fuzz in
-    tests/test_exactmath.py, old-vs-new equality in
-    tests/test_driver_side_iteration.py).  Measured: build 4.8–16 s →
+    tests/test_exactmath.py, oracle equality in
+    tests/test_exactmath.py::test_markov_queries_match_oracle).  Measured: build 4.8–16 s →
     ~0.5 s at sf0.1 (9 jobs → 1)."""
     from pyspark.sql import Window
 
@@ -1913,7 +1913,8 @@ def events_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay: the chain construction is ≤2-term commutative double addition
     (each redirected group merges at most {pv(src,c), pv(src,'NULL')}), and
     each step is the exact quantized mass sum of functions/exactmath.py;
-    old-vs-new equality is asserted in tests/test_driver_side_iteration.py
+    oracle equality is asserted in
+    tests/test_exactmath.py::test_markov_queries_match_oracle
     and the oracle hash is unchanged at all three SFs.  Measured: build
     11–16 s → ~0.6 s at sf0.1 (14 jobs → 1)."""
     from pyspark.sql import Window

@@ -65,11 +65,13 @@ def sessionize(
     """Gap-based sessionization: lag + cumulative-sum-of-gap-breaks.
 
     Single shuffle on ``user_col``; both window functions share the same
-    partitioning so Catalyst plans one Exchange.
+    partitioning so Catalyst plans one Exchange.  The gap is taken in
+    microseconds, so a gap of ``gap_minutes`` plus a fraction of a second
+    starts a new session (a whole-second cast would truncate it away).
     """
     w = Window.partitionBy(user_col).orderBy(ts_col, "event_id")
-    gap = F.col(ts_col).cast("long") - F.lag(F.col(ts_col).cast("long")).over(w)
-    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
+    gap = F.unix_micros(ts_col) - F.lag(F.unix_micros(ts_col)).over(w)
+    is_new = F.when(gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), 1).otherwise(0)
     return events.withColumn("session_seq", F.sum(is_new).over(w))
 
 

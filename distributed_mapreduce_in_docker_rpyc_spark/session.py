@@ -15,12 +15,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Reference parity knobs (SURVEY.md §4): the only two physical-planning knobs the
-# reference exposes are reduce fan-out (NUM_REDUCERS, coordinator/coordinator.py:11)
-# and map split size (32 MB, coordinator/coordinator.py:57).  Both are config here,
-# neither affects results.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-DEFAULT_MAX_PARTITION_BYTES = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
+# The reference's two physical-planning knobs (SURVEY.md §4) are reduce fan-out
+# (NUM_REDUCERS, coordinator/coordinator.py:11) and map split size (32 MB,
+# coordinator/coordinator.py:57); neither affects results.  Here they are fixed
+# session defaults: fan-out is ``get_spark(shuffle_partitions=...)``, and the
+# reference's 32 MB splits are ``ingest.read_lines(split_bytes=SPLIT_BYTES)``.
+DEFAULT_SHUFFLE_PARTITIONS = 32
+DEFAULT_MAX_PARTITION_BYTES = str(128 * 1024 * 1024)
 
 
 def get_spark(app_name: str = "distributed_mapreduce_in_docker_rpyc_spark", *, shuffle_partitions: int | None = None) -> SparkSession:

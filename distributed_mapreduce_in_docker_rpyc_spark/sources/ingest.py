@@ -20,9 +20,10 @@ Reference semantics being re-expressed (citations into /root/reference):
 100 TB posture: this module is an EDGE LOADER.  At scale the right design is
 text/Parquet pre-staged in object storage read by ``spark.read``; a single ZIP
 over HTTP is inherently a one-node bottleneck (the reference has the same
-constraint — one coordinator downloads everything).  The distributed
-``zip_lines`` path exists so that MANY archives (the realistic 100 TB layout:
-thousands of multi-GB archives) extract in parallel, one task each.
+constraint — one coordinator downloads everything).  The distributed ZIP
+reader is ``spark.read.format("ziptext")`` (``sources/zip_datasource.py``):
+MANY archives (the realistic 100 TB layout: thousands of multi-GB archives)
+extract in parallel there, one task each.
 """
 
 from __future__ import annotations
@@ -31,17 +32,13 @@ import os
 import shutil
 import urllib.request
 import zipfile
-from collections.abc import Iterator
 from urllib.parse import urlparse
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 DOWNLOAD_CHUNK_BYTES = 1024 * 1024  # reference coordinator/coordinator.py:29
 DOWNLOAD_TIMEOUT_SECS = 600  # reference coordinator/coordinator.py:27
 SPLIT_BYTES = 32 * 1024 * 1024  # reference coordinator/coordinator.py:57
-
-ZIP_LINES_SCHEMA = "archive string, member string, value string"
 
 
 def download(url: str, data_dir: str) -> list[str]:
@@ -107,53 +104,6 @@ def transcode_lossy(path: str, txt: str | None = None) -> str:
         os.remove(path)
     os.replace(tmp, txt)
     return txt
-
-
-def zip_lines(spark: SparkSession, path: str) -> DataFrame:
-    """OP-2/OP-3 distributed: ``binaryFile`` scan over ZIP archives →
-    ``(archive, member, value)`` with one row per text line, decoded
-    UTF-8-lossy.  One task per archive (ZIP is not splittable); scales by
-    archive count, which is the only axis ZIP can scale on.
-    """
-
-    def explode_archives(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            for arc_path, content in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(io.BytesIO(content)) as zf:
-                    for member in zf.infolist():
-                        if member.is_dir():
-                            continue
-                        text = zf.read(member).decode("utf-8", "ignore")
-                        lines = text.split("\n")
-                        yield pd.DataFrame(
-                            {
-                                "archive": arc_path,
-                                "member": member.filename,
-                                "value": lines,
-                            }
-                        )
-
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
-    return binary.mapInPandas(explode_archives, ZIP_LINES_SCHEMA)
-
-
-def text_lines_lossy(spark: SparkSession, path: str) -> DataFrame:
-    """Byte-parity text reader: ``binaryFile`` + ``decode(utf-8, ignore)``.
-
-    Only needed when input may contain invalid UTF-8 AND the dropped-vs-
-    replaced distinction matters (SURVEY.md §1.2); clean input should use
-    ``read_lines`` (splittable, streamed, pushdown-capable).
-    """
-
-    def decode_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                yield pd.DataFrame({"value": content.decode("utf-8", "ignore").split("\n")})
-
-    binary = spark.read.format("binaryFile").load(path).select("content")
-    return binary.mapInPandas(decode_files, "value string")
 
 
 def read_lines(spark: SparkSession, path: str, split_bytes: int | None = None) -> DataFrame:

@@ -41,6 +41,18 @@ ZIPTEXT_SCHEMA = StructType(
 )
 
 
+def _archive_lines(path: str) -> Iterator[tuple]:
+    """``(archive, member, line)`` rows of one archive: directories skipped,
+    each member decoded UTF-8-lossy (invalid sequences dropped)."""
+    with zipfile.ZipFile(path) as zf:
+        for member in zf.infolist():
+            if member.is_dir():
+                continue
+            text = zf.read(member).decode("utf-8", "ignore")
+            for line in text.split("\n"):
+                yield (path, member.filename, line)
+
+
 class _ArchivePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
@@ -57,13 +69,7 @@ class ZipTextReader(DataSourceReader):
         return [_ArchivePartition(p) for p in paths]
 
     def read(self, partition: _ArchivePartition) -> Iterator[tuple]:
-        with zipfile.ZipFile(partition.path) as zf:
-            for member in zf.infolist():
-                if member.is_dir():
-                    continue
-                text = zf.read(member).decode("utf-8", "ignore")
-                for line in text.split("\n"):
-                    yield (partition.path, member.filename, line)
+        return _archive_lines(partition.path)
 
 
 class ZipTextDataSource(DataSource):
@@ -104,15 +110,8 @@ class ZipTextStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"files": []}
 
-    def _rows_for(self, paths: list[str]):
-        for p in paths:
-            with zipfile.ZipFile(p) as zf:
-                for member in zf.infolist():
-                    if member.is_dir():
-                        continue
-                    text = zf.read(member).decode("utf-8", "ignore")
-                    for line in text.split("\n"):
-                        yield (p, member.filename, line)
+    def _rows_for(self, paths: list[str]) -> list[tuple]:
+        return [row for p in paths for row in _archive_lines(p)]
 
     def read(self, start: dict):
         seen = set(start["files"])
@@ -122,10 +121,10 @@ class ZipTextStreamReader(SimpleDataSourceStreamReader):
         # iter(list), not a generator: the runner caches the prefetched
         # batch and pickles it (generators can't pickle), but also calls
         # next() on it (bare lists aren't iterators).
-        return iter(list(self._rows_for(new))), end
+        return iter(self._rows_for(new)), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
         new = sorted(set(end["files"]) - set(start["files"]))
-        return iter(list(self._rows_for(new)))
+        return iter(self._rows_for(new))
 
 

@@ -24,7 +24,7 @@ duplicates would change the WORKLOAD, not just the volume:
   10 identical vectors each.
 
 Usage: python scripts/gen_sf1.py [out_dir]   (default /tmp/sg-sf1)
-Then:  SPARK_GRAFT_SF_DIR=/tmp/sg-sf1 python bench.py
+Then:  SPARK_GRAFT_SF_DIR=/tmp/sg-sf1 python scripts/measure_stages.py
 """
 
 from __future__ import annotations

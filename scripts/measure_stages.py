@@ -1,4 +1,4 @@
-"""Per-stage wall-clock breakdown for bench queries (guide §1: measure first).
+"""Per-stage wall-clock breakdown for registered queries (guide §1: measure first).
 
 Runs each named query through the noop sink ``reps`` times in a session with
 the Spark event log enabled, then parses the log into per-query, per-stage
@@ -59,7 +59,7 @@ def main() -> None:
     spark = get_spark("stage-measure")
     assert spark.conf.get("spark.eventLog.enabled", None) == "true"
 
-    # same warm-up as bench.py
+    # warm-up: JIT + Python workers + a first parquet scan
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     (
         spark.read.parquet(os.path.join(sf_dir, "region.parquet"))

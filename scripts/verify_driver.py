@@ -1,6 +1,6 @@
-"""Driver-contract simulation: exercises __spark_entry__ exactly as the
-round driver does — entry(spark) smoke at sf0.001, then every queries() entry
-at sf0.01 hash-compared against oracle_sql() via DuckDB.
+"""Driver-contract check: exercises __spark_entry__ end to end —
+entry(spark) smoke at sf0.001, then every queries() entry at sf0.01
+compared against oracle_sql() via DuckDB (views from tests/oracle.py).
 
 r9: the comparison is DTYPE-FAITHFUL (VERDICT r8 next-round #4) — in
 addition to the value compare, every oracle result is ALSO fetched through
@@ -23,12 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
-
-TABLE_NAMES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from tests.oracle import duckdb_conn
 
 
 def norm_cell(v, places=6):
@@ -186,14 +181,6 @@ def main() -> int:
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--smoke-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--only", default="")
-    ap.add_argument(
-        "--strict",
-        action="store_true",
-        help="fail if any oracle-backed query that has never had a driver "
-        "correctness row sits OUTSIDE the driver's 50-slot budget window "
-        "(i.e. would stay unchecked after the next round) — the guard "
-        "against overflow silently accumulating (VERDICT r4 #8)",
-    )
     args = ap.parse_args()
 
     import __spark_entry__ as e
@@ -209,11 +196,7 @@ def main() -> int:
     assert len(rows) >= 0 and df.columns
 
     # 2. differential per query
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        p = os.path.join(args.sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
+    con = duckdb_conn(args.sf_dir)
 
     queries = e.queries()
     oracles = e.oracle_sql()
@@ -294,29 +277,6 @@ def main() -> int:
     if failures:
         print("failures:", failures)
 
-    if args.strict:
-        import glob
-        import json
-
-        ever_checked: set[str] = set()
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-            with open(p) as fh:
-                ever_checked.update(json.load(fh))
-        window = list(queries)[:50]
-        stranded = [
-            n
-            for n in queries
-            if n in oracles and n not in ever_checked and n not in window
-        ]
-        if stranded:
-            print(
-                f"STRICT: {len(stranded)} never-checked oracle-backed "
-                f"queries sit outside the 50-slot window: {stranded}\n"
-                "        pin them in DRIVER_PRIORITY ahead of stale greens."
-            )
-            return 1
-        print("STRICT: every never-checked oracle-backed query is inside the window")
     return 1 if failures else 0
 
 

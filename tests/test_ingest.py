@@ -77,17 +77,13 @@ def test_download_over_http_loopback(tmp_path, sample_zip):
 
 
 def test_zip_lines_distributed_matches_lossy_decode(spark, sample_zip):
-    rows = ingest.zip_lines(spark, sample_zip).collect()
+    from distributed_mapreduce_in_docker_rpyc_spark.sources.zip_datasource import register_ziptext
+
+    register_ziptext(spark)
+    rows = spark.read.format("ziptext").load(sample_zip).collect()
     members = {r.member for r in rows}
     assert members == {"docs/a.txt", "docs/b.txt"}
     got = [r.value for r in rows if r.member == "docs/b.txt"]
-    assert got == DIRTY.decode("utf-8", "ignore").split("\n")
-
-
-def test_text_lines_lossy(spark, tmp_path):
-    raw = tmp_path / "dirty.txt"
-    raw.write_bytes(DIRTY)
-    got = [r.value for r in ingest.text_lines_lossy(spark, str(raw)).collect()]
     assert got == DIRTY.decode("utf-8", "ignore").split("\n")
 
 
@@ -115,14 +111,20 @@ def test_read_lines_split_conf(spark, tmp_path):
     spark.conf.set("spark.sql.files.maxPartitionBytes", "134217728")
 
 
-def test_ziptext_datasource_matches_mapinpandas_path(spark, sample_zip):
-    """The format('ziptext') Python DataSource must produce exactly the rows
-    of the binaryFile+mapInPandas path, one partition per archive."""
+def test_ziptext_datasource_matches_zipfile_decode(spark, sample_zip):
+    """The format('ziptext') Python DataSource must produce exactly the
+    lines of Python's own zipfile + lossy decode, one partition per archive."""
     from distributed_mapreduce_in_docker_rpyc_spark.sources.zip_datasource import register_ziptext
 
     register_ziptext(spark)
     ds = spark.read.format("ziptext").load(sample_zip)
     via_ds = {(r.member, r.value) for r in ds.collect()}
-    via_mp = {(r.member, r.value) for r in ingest.zip_lines(spark, sample_zip).collect()}
-    assert via_ds == via_mp and via_ds
+    with zipfile.ZipFile(sample_zip) as zf:
+        via_zipfile = {
+            (m.filename, line)
+            for m in zf.infolist()
+            if not m.is_dir()
+            for line in zf.read(m).decode("utf-8", "ignore").split("\n")
+        }
+    assert via_ds == via_zipfile and via_ds
     assert ds.rdd.getNumPartitions() == 1  # one task per (non-splittable) archive

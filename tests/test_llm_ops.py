@@ -271,6 +271,7 @@ def test_sessionize_gap_semantics(spark):
         (2, 100, "2024-01-01 00:10:00"),  # same session (10 min)
         (3, 100, "2024-01-01 01:00:00"),  # new session (50 min gap)
         (4, 200, "2024-01-01 00:00:00"),
+        (5, 200, "2024-01-01 00:30:00.5"),  # new session (1800.5 s gap)
     ]
     df = spark.createDataFrame(rows, ["event_id", "user_id", "ts"]).withColumn(
         "ts", F.to_timestamp("ts")
@@ -278,7 +279,7 @@ def test_sessionize_gap_semantics(spark):
     from distributed_mapreduce_in_docker_rpyc_spark.operators.relational import sessionize
 
     out = {r["event_id"]: r["session_seq"] for r in sessionize(df).collect()}
-    assert out == {1: 1, 2: 1, 3: 2, 4: 1}
+    assert out == {1: 1, 2: 1, 3: 2, 4: 1, 5: 2}
 
 
 def test_sample_frames_short_payload_edge(spark):
